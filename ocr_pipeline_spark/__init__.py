@@ -19,9 +19,9 @@ Layout:
   kernels/     pure-Python, Spark-free extraction kernels (also the golden
                oracle used by the pytest byte-identity suite)
   sources/     deterministic synthetic pages-table generator (seeded)
-  operators/   Spark DataFrame operators: extraction, partitioning/salting,
+  operators/   Spark DataFrame operators: extraction, partitioning,
                lineage manifests + resume, dedup, similarity, text stats
-  plans/       end-to-end job assembly (scan → salt → extract → sink)
+  plans/       end-to-end job assembly (scan → url shuffle → extract → sink)
   streaming/   micro-batch trigger analogue of the reference's buckets
 """
 

@@ -19,7 +19,7 @@ array in one task (the classic reducer-OOM skew). ``n_shards`` bounds
 every row at n_docs/n_shards ids WITHOUT losing information (the full
 list is the ordered concat of its shards), and shard rows of one term
 land on different reducers, so the skewed key is load-spread too — the
-same salting idea as partitioning.salt_hot_keys, but lossless because
+same salting idea as partitioning.salted_repartition, but lossless because
 the shard id is derivable from doc_id. min_df / max_df_frac bound the
 vocabulary tail (hapaxes) and head (stopwords) when the index is for
 lookup rather than audit.

@@ -83,7 +83,6 @@ def write_extracted_with_manifest(
     manifest_path: str,
     run_id: str,
     run_buckets: list[int] | None = None,
-    compact: bool = True,
 ) -> None:
     """Commit extracted rows + their lineage manifest, bucket-partitioned.
 
@@ -102,13 +101,12 @@ def write_extracted_with_manifest(
     spark = extracted_bucketed.sparkSession
     if run_buckets is not None and not run_buckets:
         return  # nothing pending (fully-resumed or empty input): no-op
-    if compact:
-        # small-files control: partitionBy writes one file per
-        # (task, bucket) pair — from P salted tasks that is up to
-        # P × buckets shards per run. Repartitioning on bucket first
-        # yields ONE file per bucket per run; the shuffle moves extracted
-        # text (~10× smaller than the page payloads that already moved).
-        extracted_bucketed = extracted_bucketed.repartition(F.col("bucket"))
+    # small-files control: partitionBy writes one file per (task, bucket)
+    # pair — from P kernel tasks that is up to P × buckets shards per run.
+    # Repartitioning on bucket first yields ONE file per bucket per run;
+    # the shuffle moves extracted text (~10× smaller than the page
+    # payloads that already moved).
+    extracted_bucketed = extracted_bucketed.repartition(F.col("bucket"))
     # per-WRITE option, not spark.conf.set: a session-wide mutation
     # silently flips every later mode("overwrite")+partitionBy write in
     # the same session to partition-level semantics (it turned

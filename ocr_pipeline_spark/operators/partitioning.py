@@ -1,9 +1,13 @@
-"""hash(url) partitioning with salt-based hot-domain skew mitigation.
+"""Domain-keyed partitioning with salt-based hot-domain skew mitigation.
 
-North-rule requirement (SURVEY.md §4.3): AQE's skew handling only rewrites
-skewed *joins/aggregations*; a skewed ``repartition`` feeding a
-``mapInPandas`` kernel is invisible to it, so salting is explicit job-level
-logic:
+No plan calls ``find_hot_domains`` or ``salted_repartition`` (the
+extraction job keys its shuffle on hash(url), which spreads a hot domain
+with no pre-pass); they are kept because the benchmark's traced
+``partitioning.*`` steps (perfbench/layers.py) still import them.
+
+AQE's skew handling only rewrites skewed *joins/aggregations*; a skewed
+``repartition`` feeding a ``mapInPandas`` kernel is invisible to it, so a
+domain-keyed layout needs explicit salting:
 
 1. a cheap pre-pass aggregates ROW counts per domain — it scans the url
    column only. (Counting payload *bytes* would be more precise but

@@ -322,9 +322,9 @@ def ewma_values(
 
     with alpha = alpha_bp / 10000. The fold runs over the key's
     time-ordered value array (sort_array over collect_list of
-    (ts, id, value) structs — the deterministic-order recipe; ties
-    break by the id column), and the oracle replays the IDENTICAL
-    operand order via DuckDB's list_reduce over list(value ORDER BY
+    (full-precision ts, id, value) structs — the deterministic-order
+    recipe; ties break by the id column), and the oracle replays the
+    IDENTICAL operand order via DuckDB's list_reduce over list(value ORDER BY
     ts, id), so every intermediate double is bit-equal (the CLAUDE.md
     sequential-left-fold rule). Output ewma is round(.,4) + 0.0.
 
@@ -343,8 +343,10 @@ def ewma_values(
     arr = (
         events.select(
             F.col(key_col).alias("k"),
+            # full-precision ts first, as the oracle's ORDER BY ts, id:
+            # truncated seconds would let id reorder a same-second pair
             F.struct(
-                F.col(ts_col).cast("timestamp").cast("long").alias("e"),
+                F.col(ts_col).cast("timestamp").alias("t"),
                 F.col(id_col).alias("i"),
                 F.col(value_col).cast("double").alias("v"),
             ).alias("s"),
@@ -354,7 +356,7 @@ def ewma_values(
         .select(
             "k",
             F.size("ss").cast("long").alias("n_events"),
-            F.element_at("ss", -1)["e"].cast("long").alias("last_ts"),
+            F.element_at("ss", -1)["t"].cast("long").alias("last_ts"),
             F.transform(F.col("ss"), lambda s: s["v"]).alias("vs"),
         )
     )

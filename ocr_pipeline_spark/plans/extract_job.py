@@ -1,17 +1,22 @@
 """The flagship job: pages table → extracted table + lineage manifests.
 
-Rebuild lifecycle (SURVEY.md §3.3), one job, one wide stage boundary:
+Rebuild lifecycle (SURVEY.md §3.3), one job, two shuffles:
 
     pages (scan; Catalyst prunes to url/html)
     → resume anti-join against committed manifest buckets
-    → salted repartition on hash(domain, salt)     [the only shuffle]
+    → repartition on hash(url)                     [shuffle 1: url, html]
     → mapInPandas fused extraction kernel          [Arrow-batched]
-    → write extracted (bucket-partitioned) + manifest rows
+    → write extracted by bucket + manifest rows    [shuffle 2: by bucket]
+
+No salt is needed: urls are unique, so hash(url) spreads a hot domain's
+pages over every partition like any other domain's, with no pre-pass.
 
 Scale notes (100 TB / 10^12 docs):
-- the shuffle moves only (url, html) — and would be skipped entirely if the
+- shuffle 1 moves only (url, html) — and would be skipped entirely if the
   input table is already bucketed by url (Iceberg bucket(url) partitioning);
   it exists to balance payload bytes across executors when it is not;
+- shuffle 2 (operators/lineage.py) moves extracted text so that a run
+  writes one file per bucket;
 - nothing block-level ever shuffles; the fused kernel keeps fan-out/fan-in
   inside one Arrow batch;
 - resume cost is one manifest-scan anti-join, independent of data size.
@@ -33,7 +38,6 @@ from ..operators.lineage import (
     write_extracted_with_manifest,
 )
 from ..operators.metrics import StageMetrics
-from ..operators.partitioning import find_hot_domains, salted_repartition
 
 __all__ = ["run_extraction"]
 
@@ -46,7 +50,6 @@ def run_extraction(
     run_id: str | None = None,
     n_buckets: int = 64,
     num_partitions: int | None = None,
-    salting: bool = True,
     metrics: StageMetrics | None = None,
 ) -> str:
     """Run (or resume) the extraction job. Returns the run_id.
@@ -63,8 +66,7 @@ def run_extraction(
     # cheap pre-pass on the input side (url column only — html pruned):
     # which buckets does this run own? Drives the manifest read-back filter.
     run_buckets = [r["bucket"] for r in todo.select("bucket").distinct().collect()]
-    hot = find_hot_domains(todo) if salting else []
-    balanced = salted_repartition(todo, num_partitions, hot)
+    balanced = todo.repartition(num_partitions, "url")
     extracted = with_bucket(extract_pages(balanced, metrics=metrics), n_buckets)
     t0 = time.monotonic()
     write_extracted_with_manifest(

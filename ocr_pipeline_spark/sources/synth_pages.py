@@ -5,8 +5,8 @@ Schema (BASELINE.json input_hint):
 
 Properties engineered in:
 - ~20 domains; 3 "hot" domains hold ~45% of rows (skew fixture for the
-  salting operator — the web analogue of the reference's uneven region
-  counts per document, README.md:84-88);
+  extraction job's partitioning — the web analogue of the reference's
+  uneven region counts per document, README.md:84-88);
 - ~90% template HTML (header/nav/sidebar/footer boilerplate around 1–8
   content paragraphs with links sprinkled at varying link density),
   ~10% mini-PDF payloads (pdfkit.build_pdf);

@@ -65,18 +65,58 @@ def test_partial_failure_resume_completes_without_dupes(spark, pages_df, tmp_pat
     assert r1_buckets | r2_buckets == set(range(n_buckets))
 
 
+def _skewed(pages_df):
+    """pages_df with ~90% of its urls moved onto one domain (paths, and so
+    urls, stay unique)."""
+    page_no = F.substring_index(F.col("url"), "/", -1).cast("int")
+    return pages_df.withColumn(
+        "url",
+        F.when(
+            page_no % 10 != 0,
+            F.regexp_replace("url", r"//[^/]+/", "//site00.example/"),
+        ).otherwise(F.col("url")),
+    )
+
+
 def test_bytes_hash_is_order_independent(spark, pages_df, tmp_path):
-    out1, man1 = str(tmp_path / "o1"), str(tmp_path / "m1")
-    out2, man2 = str(tmp_path / "o2"), str(tmp_path / "m2")
-    run_extraction(spark, pages_df, out1, man1, run_id="a", n_buckets=4,
-                   num_partitions=2)
-    run_extraction(spark, pages_df.repartition(13), out2, man2, run_id="b",
-                   n_buckets=4, num_partitions=7)
-    h1 = {r["bucket"]: r["bytes_hash"]
-          for r in spark.read.parquet(man1).collect()}
-    h2 = {r["bucket"]: r["bytes_hash"]
-          for r in spark.read.parquet(man2).collect()}
-    assert h1 == h2
+    from ocr_pipeline_spark.operators.partitioning import domain_of
+
+    skewed = _skewed(pages_df)
+    n = skewed.count()
+    top = skewed.groupBy(domain_of(F.col("url"))).count().agg(F.max("count"))
+    assert top.first()[0] >= 0.9 * n
+    for name, corpus in (("synth", pages_df), ("skewed", skewed)):
+        out1, man1 = str(tmp_path / name / "o1"), str(tmp_path / name / "m1")
+        out2, man2 = str(tmp_path / name / "o2"), str(tmp_path / name / "m2")
+        run_extraction(spark, corpus, out1, man1, run_id="a", n_buckets=4,
+                       num_partitions=2)
+        run_extraction(spark, corpus.repartition(13), out2, man2, run_id="b",
+                       n_buckets=4, num_partitions=7)
+        h1 = {r["bucket"]: r["bytes_hash"]
+              for r in spark.read.parquet(man1).collect()}
+        h2 = {r["bucket"]: r["bytes_hash"]
+              for r in spark.read.parquet(man2).collect()}
+        assert h1 == h2, name
+        urls = sorted(r["url"] for r in corpus.select("url").collect())
+        for out in (out1, out2):
+            got = spark.read.parquet(out).select("url").collect()
+            assert sorted(r["url"] for r in got) == urls, (name, out)
+
+
+def test_extraction_reads_input_twice(spark, pages_df, tmp_path):
+    """One read of the input for the run-bucket pre-pass and one for the
+    job itself: the plan keeps no other pass over the pages."""
+    rows_read = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for pdf in batches:
+            rows_read.add(len(pdf))
+            yield pdf
+
+    counted = pages_df.mapInPandas(count_rows, schema=pages_df.schema)
+    run_extraction(spark, counted, str(tmp_path / "out"), str(tmp_path / "man"),
+                   run_id="r", n_buckets=8)
+    assert rows_read.value == 2 * pages_df.count()
 
 
 def test_compaction_one_file_per_bucket(spark, pages_df, tmp_path):

@@ -255,6 +255,10 @@ def test_ewma_values_fold_and_ties(spark):
         # same-timestamp tie for user 2: event_id breaks it (5 then 6)
         (5, dt(2026, 1, 1, 9), 2, "v", 10.0),
         (6, dt(2026, 1, 1, 9), 2, "v", 0.0),
+        # same second for user 3, event_id order the reverse of ts order:
+        # the fold follows full-precision ts (9 then 8), as the oracle does
+        (9, dt(2026, 1, 1, 9, 0, 0, 100000), 3, "v", 10.0),
+        (8, dt(2026, 1, 1, 9, 0, 0, 900000), 3, "v", 0.0),
     ]
     df = spark.createDataFrame(
         rows,
@@ -262,14 +266,16 @@ def test_ewma_values_fold_and_ties(spark):
         " value double",
     )
     got = {
-        r["user_id"]: (r["n_events"], r["ewma"])
+        r["user_id"]: (r["n_events"], r["last_ts"], r["ewma"])
         for r in ewma_values(df).collect()
     }
-    assert got[1] == (3, 1.56)      # 1 -> 1.2 -> 1.56 at alpha 0.2
-    assert got[2] == (2, 8.0)       # 10 -> 10 + 0.2*(0-10) = 8.0
+    nine = int(dt(2026, 1, 1, 9).timestamp())
+    assert got[1] == (3, nine + 3 * 3600, 1.56)  # 1 -> 1.2 -> 1.56, alpha .2
+    assert got[2] == (2, nine, 8.0)       # 10 -> 10 + 0.2*(0-10) = 8.0
+    assert got[3] == (2, nine, 8.0)       # id order would give 2.0
     # partition independence
     b = {
-        r["user_id"]: (r["n_events"], r["ewma"])
+        r["user_id"]: (r["n_events"], r["last_ts"], r["ewma"])
         for r in ewma_values(df.repartition(5)).collect()
     }
     assert b == got
