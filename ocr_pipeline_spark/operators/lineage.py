@@ -54,7 +54,10 @@ def committed_buckets(spark: SparkSession, manifest_path: str) -> DataFrame:
     try:
         return spark.read.parquet(manifest_path).select("bucket").distinct()
     except Exception:  # first run: no manifest table
-        return spark.createDataFrame([], "bucket int")
+        # limit(0) turns the RDD-backed frame into an empty local relation,
+        # which Catalyst prunes from the anti-join: without it a first run
+        # shuffles and sorts every page payload by bucket to join nothing
+        return spark.createDataFrame([], "bucket int").limit(0)
 
 
 def pending(pages_bucketed: DataFrame, committed: DataFrame) -> DataFrame:

@@ -3,7 +3,7 @@
 Rebuild lifecycle (SURVEY.md §3.3), one job, two shuffles:
 
     pages (scan; Catalyst prunes to url/html)
-    → resume anti-join against committed manifest buckets
+    → resume anti-join against committed buckets   [broadcast; pruned if no manifest]
     → repartition on hash(url)                     [shuffle 1: url, html]
     → mapInPandas fused extraction kernel          [Arrow-batched]
     → write extracted by bucket + manifest rows    [shuffle 2: by bucket]

@@ -37,6 +37,16 @@ def test_full_run_then_resume_is_noop(spark, pages_df, tmp_path):
     assert todo.count() == 0
 
 
+def test_first_run_plan_has_no_anti_join(spark, pages_df, tmp_path):
+    """With no manifest yet the resume anti-join drops out of the plan, so a
+    first run does not shuffle the page payloads by bucket to join nothing."""
+    committed = committed_buckets(spark, str(tmp_path / "no_manifest"))
+    todo = pending(with_bucket(pages_df, 8), committed)
+    plan = todo._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in plan
+    assert todo.count() == pages_df.count()
+
+
 def test_partial_failure_resume_completes_without_dupes(spark, pages_df, tmp_path):
     """Kill-after-partial-commit: run over half the buckets, then resume
     over the full input; final output has every url exactly once and the
